@@ -22,13 +22,11 @@ import org.apache.spark.sql.functions._
   *   sbt "runMain graft.DedupScaleBench [rows=1000000] [runs=3] [partitions=32]"
   * Prints one JSON line {"metric":"dedup_scale",...}.
   *
-  * `partitions` is the scale dial the curve itself exposed: the minhash
-  * partial aggregation holds rows/partitions doc keys × 16 md5 strings
-  * per task map — at fixed partitions=32 that map grows with corpus size
-  * until it spills (measured: the 20M point runs 3.1× the 10M point at
-  * 32 partitions, but scales linearly again once partitions grow with
-  * the data). On a real cluster partitions track input splits
-  * automatically; in local[] range generation they must be set.
+  * `partitions` is the scale dial: each task sorts its rows/partitions
+  * signature rows for the per-id min fold, so at fixed partitions the
+  * per-task sort grows with corpus size. On a real cluster partitions
+  * track input splits automatically; in local[] range generation they
+  * must be set.
   */
 object DedupScaleBench {
 

@@ -116,14 +116,20 @@ object GraftExtensions extends (SparkSessionExtensions => Unit) {
     // relation answers from the stats manifests (Delta's
     // OptimizeMetadataOnlyQuery shape) — EXPLAIN shows no scan at all
     ext.injectOptimizerRule(s => new graft.plans.GraftStatsAggRule(s))
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[ArrayDotProduct].getName, "graft_dot"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2,
-          s"graft_dot requires exactly 2 arguments, got ${children.length}")
-        ArrayDotProduct(children.head, children(1))
-      }))
+    def binary(name: String, cls: Class[_],
+        build: (Expression, Expression) => Expression): Unit =
+      ext.injectFunction((
+        FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name),
+        (children: Seq[Expression]) => {
+          require(children.length == 2,
+            s"$name requires exactly 2 arguments, got ${children.length}")
+          build(children.head, children(1))
+        }))
+    binary("graft_dot", classOf[ArrayDotProduct], ArrayDotProduct)
+    // word k-grams and MinHash signatures of a token array (Shingles.scala)
+    binary("graft_shingles", classOf[ArrayShingles], ArrayShingles)
+    binary("graft_minhash", classOf[MinHashSignature], MinHashSignature)
     ext.injectFunction((
       FunctionIdentifier("graft_nfc"),
       new ExpressionInfo(classOf[NfcNormalize].getName, "graft_nfc"),

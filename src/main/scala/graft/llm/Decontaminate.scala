@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Benchmark DECONTAMINATION — the n-gram overlap check every serious
@@ -35,25 +35,6 @@ import org.apache.spark.sql.functions._
   */
 object Decontaminate {
 
-  /** N-grams of a BOUND token-array column (empty when the doc has
-    * fewer than `n` tokens). Takes tokens, not text: the expression
-    * references its input several times (twice in the guard, once per
-    * gram in the lambda) — an inlined `split(norm(text))` tree would
-    * re-evaluate per gram (the TextOps perf contract, a measured 30×
-    * on shingle transforms), a bound column costs one projection.
-    */
-  def gramsOfToks(toks: Column, n: Int): Column =
-    when(size(toks) >= n,
-      transform(sequence(lit(0), size(toks) - lit(n)),
-        i => array_join(slice(toks, i + lit(1), lit(n)), " ")))
-      .otherwise(array().cast("array<string>"))
-
-  /** Convenience for one-shot use over raw text — prefer projecting
-    * tokens into a column and calling [[gramsOfToks]] in hot paths.
-    */
-  def grams(textCol: Column, n: Int): Column =
-    gramsOfToks(split(TextOps.norm(textCol), " "), n)
-
   /** Per-doc contamination report: `(idCol, n_hits)` for every corpus
     * doc that contains at least one benchmark n-gram; `n_hits` counts
     * DISTINCT benchmark grams present (a gram repeated inside one doc
@@ -62,13 +43,13 @@ object Decontaminate {
   def flag(corpus: DataFrame, bench: DataFrame, textCol: String,
       idCol: String, n: Int): DataFrame = {
     require(n >= 2, s"n-gram order must be >= 2, got $n")
-    // tokens bound ONCE per row before the gram lambda references them
+    // n-grams through the shared shingle kernel (TextOps.shinglesKOf)
     val benchGrams = bench
       .select(split(TextOps.norm(col(textCol)), " ").as("__toks"))
-      .select(explode(gramsOfToks(col("__toks"), n)).as("__g")).distinct()
+      .select(explode(TextOps.shinglesKOf(col("__toks"), n)).as("__g")).distinct()
     val corpusGrams = corpus
       .select(col(idCol), split(TextOps.norm(col(textCol)), " ").as("__toks"))
-      .select(col(idCol), explode(gramsOfToks(col("__toks"), n)).as("__g"))
+      .select(col(idCol), explode(TextOps.shinglesKOf(col("__toks"), n)).as("__g"))
     // broadcast semi-probe: the corpus side stays map-side; only hits
     // reach the count shuffle
     corpusGrams
@@ -119,13 +100,13 @@ object Decontaminate {
     val benchGrams = bench
       .select(col(benchIdCol).as("bench_id"),
         split(TextOps.norm(col(textCol)), " ").as("__toks"))
-      .select(col("bench_id"), explode(gramsOfToks(col("__toks"), n)).as("__g"))
+      .select(col("bench_id"), explode(TextOps.shinglesKOf(col("__toks"), n)).as("__g"))
       .distinct()
     val benchSizes = benchGrams.groupBy(col("bench_id"))
       .agg(count(lit(1)).as("n_bench_grams"))
     val corpusGrams = corpus
       .select(col(idCol), split(TextOps.norm(col(textCol)), " ").as("__toks"))
-      .select(col(idCol), explode(gramsOfToks(col("__toks"), n)).as("__g"))
+      .select(col(idCol), explode(TextOps.shinglesKOf(col("__toks"), n)).as("__g"))
     corpusGrams
       .join(broadcast(benchGrams), Seq("__g"))
       .groupBy(col(idCol), col("bench_id"))

@@ -49,49 +49,39 @@ object Dedup {
   val Bands = 4
   val RowsPerBand: Int = NumHashes / Bands
 
-  /** Long-form MinHash signature: one row per (id, seed) with the min
-    * seeded-md5 over the document's 3-gram shingles. Docs with < 3 tokens
-    * produce no rows (no shingles → no signature → never a candidate).
+  /** MinHash-LSH band keys: (id, band, band_key) for every document with
+    * at least one 3-gram shingle, band_key = md5 over the band's
+    * `RowsPerBand` ordered minhashes joined by '|'. The signature is k=16
+    * mins of `md5("s<i>|" + shingle)`; docs with < 3 tokens (or NULL
+    * text) have no shingles → no signature → no rows, never a candidate.
+    * Shared by [[minhashCandidates]] and the persisted index of
+    * `IncrementalDedup`, so batch and incremental keys are one function.
     *
-    * One-pass plan: the k mins are k conditional aggregates over a SINGLE
-    * scan of the (id, shingle) rows — k·shingles hashes but no k× row
-    * blowup, and Catalyst's partial aggregation collapses to one row per
-    * doc map-side, so the shuffle carries docs, not docs×shingles×k.
-    * (The naive explode-seeds plan shuffled 16× the shingle volume — at
-    * 100 TB that is the whole job's cost.) The wide row is then unpivoted
-    * with stack() for the band layer.
+    * One-pass plan: the native `graft_minhash` kernel
+    * (`graft.functions.MinHashSignature`) hashes each document's shingles
+    * in ONE projection — shingles never become rows, and md5 digests are
+    * compared as bytes and hex-encoded once per seed per doc. A per-id
+    * `min` fold over the 16 signature columns then merges rows that share
+    * an id (the min over the union of their shingles); its shuffle carries
+    * one row per doc. The band keys are a projection over the folded row,
+    * unpivoted by `posexplode`. The fold's null filter sits AFTER the
+    * aggregate: pushed below it, the check would re-run the kernel.
     */
-  def minhashSignature(docs: DataFrame, textCol: String, idCol: String): DataFrame = {
-    // Tokens are materialized in their own projection so the shingle
-    // transform's element_at calls hit a bound array attribute — inlining
-    // the split/regex tree would re-run it per element (see TextOps).
-    val sh = docs
-      .select(col(idCol), TextOps.tokens(col(textCol)).as("__toks"))
-      .select(col(idCol), explode(TextOps.shingles3(col("__toks"))).as("sh"))
-    val mins = (0 until NumHashes).map(i =>
-      min(md5(concat(lit(s"s$i|"), col("sh")))).as(s"mh$i"))
-    val stackExpr =
-      s"stack($NumHashes, ${(0 until NumHashes).map(i => s"$i, mh$i").mkString(", ")}) AS (seed, mh)"
-    sh.groupBy(col(idCol))
+  def bandKeys(docs: DataFrame, textCol: String, idCol: String): DataFrame = {
+    val sig = docs.select(col(idCol),
+      call_function("graft_minhash", TextOps.tokens(col(textCol)), lit(NumHashes)).as("__mh"))
+    val mins = (0 until NumHashes).map(i => min(col("__mh")(i)).as(s"mh$i"))
+    val keys = (0 until Bands).map(b =>
+      md5(concat_ws("|", (0 until RowsPerBand).map(r => col(s"mh${b * RowsPerBand + r}")): _*)))
+    sig.groupBy(col(idCol))
       .agg(mins.head, mins.tail: _*)
-      .select(col(idCol), expr(stackExpr))
-  }
-
-  /** Band keys: md5 over the band's `RowsPerBand` ordered minhashes. */
-  def bandKeys(sig: DataFrame, idCol: String): DataFrame = {
-    val parts = (0 until RowsPerBand).map(r =>
-      max(when(pmod(col("seed"), lit(RowsPerBand)) === r, col("mh"))).as(s"p$r"))
-    // floor() before the int cast: Spark's double→int cast truncates but
-    // DuckDB's rounds — floor makes the band id identical in both.
-    sig.groupBy(col(idCol), floor(col("seed") / RowsPerBand).cast("int").as("band"))
-      .agg(parts.head, parts.tail: _*)
-      .select(col(idCol), col("band"),
-        md5(concat_ws("|", (0 until RowsPerBand).map(r => col(s"p$r")): _*)).as("band_key"))
+      .filter(col("mh0").isNotNull)
+      .select(col(idCol), posexplode(array(keys: _*)).as(Seq("band", "band_key")))
   }
 
   /** LSH candidate pairs (id_a < id_b) with the number of shared bands. */
   def minhashCandidates(docs: DataFrame, textCol: String, idCol: String): DataFrame = {
-    val bk = bandKeys(minhashSignature(docs, textCol, idCol), idCol)
+    val bk = bandKeys(docs, textCol, idCol)
     val a = bk.select(col(idCol).as("id_a"), col("band"), col("band_key"))
     val b = bk.select(col(idCol).as("id_b"), col("band"), col("band_key"))
     a.join(b, Seq("band", "band_key"))

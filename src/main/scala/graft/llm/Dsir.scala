@@ -58,9 +58,7 @@ object Dsir {
     // than hand select/resample a table they cannot inline
     require(b > 0 && b <= (1 << 16), s"bucket count out of range: $b")
     val spark = target.sparkSession
-    // tokens BOUND once per row before the bigram lambda references them
-    // (TextOps perf contract: an inlined tokenize tree re-evaluates the
-    // regex split per array element — a measured 30× on shingle shapes)
+    // tokens bound once per row (TextOps perf contract)
     def counts(df: DataFrame, as: String): DataFrame = df
       .select(TextOps.tokens(col(textCol)).as("__toks"))
       .select(explode(bucketsOf(col("__toks"), b)).as("bucket"))

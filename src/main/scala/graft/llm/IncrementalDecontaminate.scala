@@ -43,7 +43,7 @@ object IncrementalDecontaminate {
     graft.ops.Upsert.recover(f, statePath)
     val batch = bench
       .select(split(TextOps.norm(col(textCol)), " ").as("__toks"))
-      .select(explode(Decontaminate.gramsOfToks(col("__toks"), n)).as("__g"))
+      .select(explode(TextOps.shinglesKOf(col("__toks"), n)).as("__g"))
       .distinct().withColumn("n", lit(n))
     val merged =
       if (!f.exists(new Path(statePath))) batch
@@ -63,7 +63,7 @@ object IncrementalDecontaminate {
     val benchGrams = spark.read.parquet(statePath).select(col("__g"))
     corpus
       .select(col(idCol), split(TextOps.norm(col(textCol)), " ").as("__toks"))
-      .select(col(idCol), explode(Decontaminate.gramsOfToks(col("__toks"), n)).as("__g"))
+      .select(col(idCol), explode(TextOps.shinglesKOf(col("__toks"), n)).as("__g"))
       .join(broadcast(benchGrams), Seq("__g"), "left_semi")
       .groupBy(col(idCol))
       .agg(countDistinct(col("__g")).as("n_hits"))

@@ -24,7 +24,8 @@ import org.apache.spark.sql.functions._
   *
   * Per-batch work (`addBatch`):
   *  1. Sign the BATCH only: shingle → 16 minhashes → 4 band keys
-  *     (`Dedup.minhashSignature`/`bandKeys`). Cost O(|batch|).
+  *     (`Dedup.bandKeys`, the same function the batch path uses, so keys
+  *     persisted by any earlier batch match). Cost O(|batch|).
   *  2. Append the batch's band rows to the index, then equi-join the
   *     batch's bands against the FULL index on (band, band_key). Cost is
   *     Σ bucket-pair volume touching the batch — never corpus², and the
@@ -56,7 +57,7 @@ object IncrementalDedup {
 
   /** Band-key relation of a batch: (id, band, band_key). */
   def bandIndex(batch: DataFrame, textCol: String, idCol: String): DataFrame =
-    Dedup.bandKeys(Dedup.minhashSignature(batch, textCol, idCol), idCol)
+    Dedup.bandKeys(batch, textCol, idCol)
       .select(col(idCol).cast("long").as("id"), col("band"), col("band_key"))
 
   /** Canonical new candidate pairs: the batch's bands probed against the

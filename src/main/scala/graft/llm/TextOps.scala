@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 /** Text-analysis primitives for LLM training-data pipelines: normalize /
   * tokenize / shingle / token-count / language-ID / quality score /
   * fingerprint. Every function is a pure Column expression over Spark
-  * built-ins (incl. higher-order array functions) — no UDFs, so the whole
-  * layer stays inside WholeStageCodegen and runs at scan speed at 100 TB.
+  * built-ins (incl. higher-order array functions) and the engine's native
+  * kernels (`graft_shingles`) — no UDFs, so Catalyst sees through the
+  * whole layer.
   *
   * Hash parity note: all content hashes are md5-derived (not xxhash64 /
   * murmur) so the DuckDB oracle can reproduce them bit-for-bit; md5
@@ -57,45 +58,25 @@ object TextOps {
     })
   }
 
-  /** Word-level 3-gram shingles (empty array when < 3 tokens). Element
-    * access is 1-based `element_at` to mirror 1-based list indexing in the
-    * oracle SQL.
+  /** Word-level k-gram shingles of a token array: gram i joins tokens
+    * i..i+k-1 with single spaces; empty when < k tokens or NULL.
     *
-    * PERF CONTRACT: pass a *materialized* array column (project
-    * `tokens(...)` into its own column first), never the raw
-    * `tokens(text)` expression tree. The transform lambda references
-    * `toks` ~3×|shingles| times per row; a bound attribute makes each
-    * reference an O(1) array read, while an inlined split/regex tree is
-    * re-evaluated on every reference — ~150 regex runs per row, a
-    * measured 30× slowdown (and CollapseProject will not merge the
-    * guard projection precisely because the reference is non-cheap).
-    */
-  def shingles3(toks: Column): Column =
-    when(size(toks) >= 3,
-      transform(sequence(lit(1), size(toks) - 2),
-        i => concat_ws(" ",
-          element_at(toks, i), element_at(toks, i + 1), element_at(toks, i + 2))))
-      .otherwise(array().cast("array<string>"))
-
-  /** Word-level k-gram shingles of a materialized token array (empty when
-    * < k tokens; same perf contract as [[shingles3]]). `k` is a plan-time
-    * constant, so the concat is a fixed-arity codegen expression — no
-    * per-row loop over k.
+    * PERF CONTRACT: one implementation, the native `graft_shingles`
+    * kernel (`graft.functions.ArrayShingles`), for every width — see its
+    * scaladoc for why a native Expression. It reads its input once per
+    * row inside WholeStageCodegen, so an inlined `tokens(text)` tree is
+    * evaluated once; callers that use the tokens more than once (size,
+    * several shingle widths) still project `tokens(...)` into its own
+    * column first.
     */
   def shinglesKOf(toks: Column, k: Int): Column =
-    when(size(toks) >= k,
-      transform(sequence(lit(1), size(toks) - (k - 1)),
-        i => concat_ws(" ", (0 until k).map(j => element_at(toks, i + j)): _*)))
-      .otherwise(array().cast("array<string>"))
+    call_function("graft_shingles", toks, lit(k))
 
-  /** Word bigrams of a materialized token array (empty when < 2 tokens;
-    * same perf contract as [[shingles3]]).
-    */
-  def bigramsOf(toks: Column): Column =
-    when(size(toks) >= 2,
-      transform(sequence(lit(1), size(toks) - 1),
-        i => concat_ws(" ", element_at(toks, i), element_at(toks, i + 1))))
-      .otherwise(array().cast("array<string>"))
+  /** Word 3-gram shingles — the width of the MinHash/Jaccard dedup path. */
+  def shingles3(toks: Column): Column = shinglesKOf(toks, 3)
+
+  /** Word bigrams (empty when < 2 tokens). */
+  def bigramsOf(toks: Column): Column = shinglesKOf(toks, 2)
 
   /** First 32 bits of md5 as a non-negative long — the shared scalar hash. */
   def hash32(c: Column): Column =
@@ -110,7 +91,7 @@ object TextOps {
     * pass MATERIALIZED `norm`/`tokens` columns, projected once per row —
     * the text-based convenience forms inline the normalize/split tree into
     * every reference, so a projection computing several stats re-runs the
-    * regex per stat per row (see `shingles3`'s note; same failure mode).
+    * regex per stat per row.
     */
   val BpePattern = " ?[a-z]+| ?[0-9]+| ?[^a-z0-9 ]+"
   def bpeCountOfNorm(normText: Column): Column =

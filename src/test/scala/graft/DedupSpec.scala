@@ -41,6 +41,20 @@ class DedupSpec extends SparkSpec {
       "at least one near-copy pair must be found")
   }
 
+  test("job budget: minhash candidates and n-gram Jaccard verification") {
+    import org.apache.spark.graftshim.TestListenerShim.countJobs
+    val (cands, candJobs) = countJobs(spark.sparkContext)(
+      Dedup.minhashCandidates(docs, "text", "doc_id").collect())
+    val pairs = cands.map(r => (r.getLong(0), r.getLong(1))).toSeq
+    import spark.implicits._
+    val (_, verifyJobs) = countJobs(spark.sparkContext)(
+      Dedup.ngramJaccard(docs, pairs.toDF("id_a", "id_b"), "text", "doc_id").collect())
+    // The per-id signature fold rides a shuffle the candidate plan already
+    // pays for: it must not add a job.
+    assert(candJobs == 3, s"minhashCandidates took $candJobs jobs")
+    assert(verifyJobs == 3, s"ngramJaccard took $verifyJobs jobs")
+  }
+
   test("simhash: identical docs get identical hashes; near-copies are close") {
     import spark.implicits._
     val sh = Dedup.simhash32(docs, "text", "doc_id").collect()

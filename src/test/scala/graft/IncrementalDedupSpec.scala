@@ -74,6 +74,27 @@ class IncrementalDedupSpec extends SparkSpec {
     assert(inc(30L) == 10L, "bridge joins its near-dup's cluster")
   }
 
+  test("an index persisted by the explode/stack plan matches kernel-hashed batches") {
+    // The bands and assignment of batch A exactly as earlier versions of
+    // the engine wrote them (LegacyShingles); batch B is signed by the
+    // native kernel and probed against that stored index.
+    val state = tmpDir("inc-dedup-legacy-index")
+    val a = corpus.filter($"doc_id" <= 4L)
+    val b = corpus.filter($"doc_id" > 4L)
+    val oldBands = LegacyShingles.bandKeys(a, "text", "doc_id")
+      .select($"doc_id".cast("long").as("id"), $"band", $"band_key")
+    oldBands.write.parquet(s"$state/bands")
+    val oldPairs = oldBands.as("l").join(oldBands.as("r"), Seq("band", "band_key"))
+      .filter($"l.id" < $"r.id").select($"l.id".as("id_a"), $"r.id".as("id_b"))
+    IncrementalDedup.step(spark.range(0).select($"id", $"id".as("comp")), oldPairs,
+        a.select($"doc_id".as("id")))
+      .write.parquet(s"$state/assign")
+    val inc = assignOf(IncrementalDedup.addBatch(spark, state, b, "text", "doc_id"))
+    assert(inc == fullAssign(corpus), "legacy index + new batch == one-shot recompute")
+    assert(inc(101L) == 1L && inc(201L) == 1L && inc(103L) == 3L,
+      "batch docs must find their stored near-dups through the legacy keys")
+  }
+
   test("crash between the assign renames is healed by the next addBatch") {
     val state = tmpDir("inc-dedup-crash")
     val a = corpus.filter($"doc_id" <= 4L)
